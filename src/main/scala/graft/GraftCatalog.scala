@@ -118,8 +118,8 @@ object GraftCatalog {
     // raw aggregate over `events` (count / sum(floor(value)) /
     // day-grain timeseries over a day-aligned window) is served
     // scan-free by hist_daily/agg_daily — exactness-preserving, so
-    // leaving it enabled is safe for every other SQL statement (the
+    // leaving it installed is safe for every other SQL statement (the
     // routing rules fail closed when their layer was not chosen)
-    plans.RollupRouting.enable(spark)
+    Session.install(spark, Seq(new plans.RollupRoutingRule(_)))
   }
 }

@@ -285,13 +285,10 @@ object EntityIndex {
     val alive = fs.listStatus(stagingP).filter(_.isDirectory)
       .map(_.getPath.getName).filter(_.startsWith("bucket="))
       .map(_.stripPrefix("bucket=").toLong).toSet
-    val prior = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try {
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      if (alive.nonEmpty)
-        s.read.parquet(staging)
-          .write.partitionBy("bucket").mode("overwrite").parquet(indexPath(dir))
-    } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    if (alive.nonEmpty)
+      s.read.parquet(staging).write.partitionBy("bucket")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite").parquet(indexPath(dir))
     hit.filterNot(alive).foreach { b =>
       val (dfs, p) = IndexStore.fsOf(s"${indexPath(dir)}/bucket=$b")
       dfs.delete(p, true)

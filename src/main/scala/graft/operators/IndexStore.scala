@@ -110,21 +110,14 @@ object IndexStore {
     (p.getFileSystem(conf), p)
   }
 
-  /** A cloned session pinned to UTC — for artifact BUILDS whose
+  /** A fork of `s` pinned to UTC — for artifact BUILDS whose
     * persisted values embed a timezone rendering (partition-dir
-    * strings, date_trunc day keys). The clone shares the
-    * SparkContext but owns its SQLConf, so the caller's session zone
-    * is never mutated (the bm25-build discipline), and the artifact's
-    * values are UTC regardless of who builds it — which is what every
-    * reader's UTC-parsed bounds ([[MinMaxManifest.utc]]) assume. */
-  private[operators] def utcSession(s: SparkSession): SparkSession = {
-    val us = s.newSession()
-    us.conf.set("spark.sql.session.timeZone", "UTC")
-    us.conf.set("spark.sql.ansi.enabled", s.conf.get("spark.sql.ansi.enabled"))
-    us.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("spark.sql.shuffle.partitions"))
-    us
-  }
+    * strings, date_trunc day keys). The caller's session zone is
+    * never mutated, and the artifact's values are UTC regardless of
+    * who builds it — which is what every reader's UTC-parsed bounds
+    * ([[MinMaxManifest.utc]]) assume. */
+  private[operators] def utcSession(s: SparkSession): SparkSession =
+    graft.Session.fork(s, Nil, Map("spark.sql.session.timeZone" -> "UTC"))
 
   /** Recursive artifact delete — the retrain guard's force-rebuild
     * step. Safe because every artifact build is deterministic from
@@ -815,22 +808,15 @@ object IndexStore {
       // docs — at the 1000× replica (5 M docs) the session's 32
       // shuffle partitions put ~5 M groups on each reducer and the
       // hash aggregate OOM-retried its way through. The BUILD (one
-      // per corpus lifetime) runs its jobs on a CLONED session
-      // (shared SparkContext and executors, PRIVATE SQLConf) with the
+      // per corpus lifetime) runs its jobs on a session fork with the
       // shuffle width sized to the corpus, so a query planning
       // concurrently on the caller's session never sees the widened
       // setting — the r6 advice closed (the previous save/restore of
       // the shared conf was a mid-build race). On a real cluster this
       // is just "size the build's reducers to the corpus, not to the
       // query default".
-      val bs = s.newSession()
-      // newSession starts from the STATIC conf — carry over the two
-      // runtime settings the build's semantics depend on
-      bs.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone"))
-      bs.conf.set("spark.sql.ansi.enabled", s.conf.get("spark.sql.ansi.enabled"))
-      bs.conf.set("spark.sql.shuffle.partitions",
-        math.max(s.conf.get("spark.sql.shuffle.partitions").toInt, 256).toString)
+      val bs = graft.Session.fork(s, Nil, Map("spark.sql.shuffle.partitions" ->
+        math.max(s.conf.get("spark.sql.shuffle.partitions").toInt, 256).toString))
       import bs.implicits._
       // NO persist of the tokenized corpus: caching 5 M docs'
       // token arrays is gigabytes of deserialized heap (it

@@ -26,8 +26,8 @@ import graft.operators.StatsCatalog
   * this rule reorders with NO hints ([[JoinOrderer.choose]] runs at
   * broadcastRows = 0), leaving plain Join nodes — exactly the shape
   * the steering rule then dispatches per-join (broadcast hint /
-  * salted rewrite / pass-through). [[enable]] inserts this rule
-  * BEFORE any registered steering rule so each fixed-point pass
+  * salted rewrite / pass-through). [[graft.Session]]'s install order
+  * puts this rule BEFORE the steering rule so each fixed-point pass
   * orders first, steers second; a steered (Project-wrapped) subtree
   * no longer reads as a simple leaf, so the two rewrites never
   * fight.
@@ -292,27 +292,4 @@ object JoinOrdering {
     * order. Bounded; a clear only re-pays one enumeration. */
   private[plans] val chosenMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-}
-
-object TransparentJoinOrdering {
-  /** Idempotently enable transparent ordering on `s`, INSERTED BEFORE
-    * any registered steering rule (order first, steer second — see
-    * class scaladoc). Exactness-preserving: reordering inner
-    * equi-joins is result-invisible (q87 hash-gates it), so
-    * session-wide enablement is safe. */
-  def enable(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[TransparentJoinOrderingRule])) {
-      val (steer, rest) = s.experimental.extraOptimizations
-        .partition(_.isInstanceOf[TransparentJoinSteeringRule])
-      s.experimental.extraOptimizations =
-        rest ++ (new TransparentJoinOrderingRule(s) +: steer)
-    }
-
-  /** Test seam: remove the rule so plan-pinning suites sharing the
-    * session don't see foreign reorders. */
-  private[graft] def disableForTest(s: SparkSession): Unit =
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[TransparentJoinOrderingRule])
 }

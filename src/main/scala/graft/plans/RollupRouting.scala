@@ -59,9 +59,9 @@ import graft.operators.{AggRollup, HistogramRollup, TopKRollup}
   * Output attributes keep the ORIGINAL exprIds (alias projection over
   * the spliced subtree), so parent operators (sorts, joins) are
   * oblivious to the substitution — the invariant any plan-rewrite
-  * rule must hold. Enabled per session via [[RollupRouting.enable]]
-  * (`spark.experimental.extraOptimizations`), or cluster-wide by
-  * composing into an extensions class. */
+  * rule must hold. Installed on a query's session fork by
+  * [[graft.Session.fork]], session-wide by [[graft.GraftCatalog]], or
+  * cluster-wide by composing into an extensions class. */
 class RollupRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private val MicrosPerDay = 86400L * 1000000L
@@ -454,18 +454,6 @@ class RollupRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
 }
 
 object RollupRouting {
-  /** Idempotently enable routing on `s` (the rollups must exist or
-    * the rule leaves plans untouched — build them with
-    * [[HistogramRollup.ensure]] / [[AggRollup.ensure]]).
-    * Session-scoped and exactness-preserving, so leaving it enabled
-    * is safe for every later query: anything the matcher fires on is
-    * provably equal to its raw plan. */
-  def enable(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[RollupRoutingRule]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ new RollupRoutingRule(s)
-
   /** Registered event-table identities: canonical path → the rollup
     * dir whose artifacts serve it. Registration is the caller's
     * ASSERTION OF IDENTITY — the path must read exactly the same rows
@@ -498,11 +486,4 @@ object RollupRouting {
   /** Test seam: drop registered identities. */
   private[graft] def clearRegisteredPathsForTest(): Unit =
     registeredPaths.clear()
-
-  /** Test seam: remove the rule so suites sharing one session don't
-    * leak routing into unrelated plan pins. */
-  private[graft] def disableForTest(s: SparkSession): Unit =
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[RollupRoutingRule])
 }

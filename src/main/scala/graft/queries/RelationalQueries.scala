@@ -1,6 +1,9 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Session, Tables}
+import graft.plans.{DictionaryRoutingRule, FdAggregationRule, JoinEliminationRule,
+  RollupRoutingRule, TransparentJoinOrderingRule, TransparentJoinSteeringRule,
+  TransparentResultCacheRule}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,13 +29,11 @@ object RelationalQueries {
   private def q(name: String, doc: String, oracle: String)(fn: QFn) =
     GraftQuery(name, fn, Some(oracle), doc)
 
-  /** Force `df`'s optimized plan, then run `cleanup` (unregistering
-    * whatever session rule the gate enabled): optimizedPlan memoizes,
-    * so THIS query still executes its rewritten shape while every
-    * LATER query on the shared session optimizes rule-clean — the
-    * r14 "gate-enabled rules leak into subsequent bench legs" fix. */
-  private def pinThen(df: DataFrame)(cleanup: => Unit): DataFrame =
-    try { df.queryExecution.optimizedPlan; df } finally cleanup
+  /** The steering rule the skew-fixture gates install: a 1 KB
+    * broadcast budget, so the near-fact-sized dim can never broadcast
+    * (the q69 knob) and only the salted arm can serve the join. */
+  private val skewSteering: Session.RuleFactory =
+    new TransparentJoinSteeringRule(_, broadcastBytes = 1024L)
 
   /** q57's pair budget: admitted basket pairs ≤ this × |lineitem| —
     * the d01 `BudgetPerDoc` discipline applied to co-occurrence
@@ -1739,13 +1740,12 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.HistogramRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    Tables(Session.fork(s, Seq(new RollupRoutingRule(_))), dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-08 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-18 00:00:00")))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"))
-      .orderBy($"event_type"))(graft.plans.RollupRouting.disableForTest(s))
+      .orderBy($"event_type")
   }
 
   /** q43 — K-ANONYMITY RELEASE
@@ -2013,13 +2013,12 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.AggRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    Tables(Session.fork(s, Seq(new RollupRoutingRule(_))), dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-06 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-20 00:00:00")))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp"))
-      .orderBy($"event_type"))(graft.plans.RollupRouting.disableForTest(s))
+      .orderBy($"event_type")
   }
 
   /** q48 — COUNT-MIN SKETCH POINT FREQUENCY
@@ -2114,13 +2113,12 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.AggRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    Tables(Session.fork(s, Seq(new RollupRoutingRule(_))), dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-10 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-24 00:00:00")))
       .groupBy($"event_type", date_trunc("day", $"ts").as("day"))
       .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp"))
-      .orderBy($"event_type", $"day"))(graft.plans.RollupRouting.disableForTest(s))
+      .orderBy($"event_type", $"day")
   }
 
   /** q50 — ZERO-COPY SHALLOW CLONE
@@ -2810,14 +2808,13 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.TopKRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    Tables(Session.fork(s, Seq(new RollupRoutingRule(_))), dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-01 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-14 00:00:00")))
       .groupBy($"user_id")
       .agg(count(lit(1)).as("cnt"))
       .orderBy($"cnt".desc, $"user_id")
-      .limit(20))(graft.plans.RollupRouting.disableForTest(s))
+      .limit(20)
   }
 
   /** q62 — COLUMN STATISTICS CATALOG ([[graft.operators
@@ -2888,13 +2885,13 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.StatsCatalog.ensure(s, dir, "nation")
-    graft.plans.JoinElimination.enable(s)
-    val c = Tables(s, dir, "customer")
-    val n = Tables(s, dir, "nation")
-    pinThen(c.join(n, c("c_nationkey") === n("n_nationkey"), "left")
+    val f = Session.fork(s, Seq(new JoinEliminationRule(_)))
+    val c = Tables(f, dir, "customer")
+    val n = Tables(f, dir, "nation")
+    c.join(n, c("c_nationkey") === n("n_nationkey"), "left")
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n"), round(sum($"c_acctbal"), 2).as("bal"))
-      .orderBy($"c_mktsegment"))(graft.plans.JoinElimination.disableForTest(s))
+      .orderBy($"c_mktsegment")
   }
 
   /** q64 — ORDER-PRESERVING DICTIONARY ENCODING ([[graft.operators
@@ -3022,13 +3019,12 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.AggRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    Tables(Session.fork(s, Seq(new RollupRoutingRule(_))), dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-04 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-29 00:00:00")))
       .groupBy($"event_type", date_trunc("week", $"ts").as("wk"))
       .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp"))
-      .orderBy($"event_type", $"wk"))(graft.plans.RollupRouting.disableForTest(s))
+      .orderBy($"event_type", $"wk")
   }
 
   /** q67 — CARDINALITY ESTIMATION FROM THE ANALYZE CATALOG
@@ -3153,11 +3149,10 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.AggRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    Tables(Session.fork(s, Seq(new RollupRoutingRule(_))), dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-06 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-27 00:00:00")))
-      .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp")))(graft.plans.RollupRouting.disableForTest(s))
+      .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp"))
   }
 
   /** q69 — STATS-ADVISED SKEW JOIN ([[graft.operators.Steering
@@ -3279,11 +3274,10 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.Dictionary.ensure(s, dir, "events", "event_type")
-    graft.plans.DictionaryRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    Tables(Session.fork(s, Seq(new DictionaryRoutingRule(_))), dir, "events")
       .groupBy($"event_type")
       .agg(countDistinct($"user_id").as("users"), count(lit(1)).as("n"))
-      .orderBy($"event_type"))(graft.plans.DictionaryRouting.disableForTest(s))
+      .orderBy($"event_type")
   }
 
   /** q72 — COST-BASED JOIN-ORDER SELECTION ([[graft.plans
@@ -3460,13 +3454,12 @@ object RelationalQueries {
     val SC = graft.operators.StatsCatalog
     SC.ensure(s, dir, "nation")
     SC.ensureColumnGroup(s, dir, "nation", Seq("n_nationkey", "n_name"))
-    graft.plans.FdAggregation.enable(s)
-    pinThen(Tables(s, dir, "customer")
+    Tables(Session.fork(s, Seq(new FdAggregationRule(_))), dir, "customer")
       .join(Tables(s, dir, "nation"), $"c_nationkey" === $"n_nationkey")
       .groupBy($"n_nationkey", $"n_name")
       .agg(count(lit(1)).as("customers"),
         round(sum($"c_acctbal"), 2).as("bal"))
-      .orderBy($"n_nationkey"))(graft.plans.FdAggregation.disableForTest(s))
+      .orderBy($"n_nationkey")
   }
 
   /** q76 — GDPR PURGE ON THE ENTITY STORE ([[graft.operators
@@ -3769,22 +3762,16 @@ object RelationalQueries {
       |ORDER BY o_orderstatus""".stripMargin
   ) { (s, dir) =>
     import s.implicits._
-    graft.plans.TransparentResultCache.enable(s)
-    try {
-      def shape = Tables(s, dir, "orders")
-        .groupBy($"o_orderstatus")
-        .agg(count(lit(1)).as("n"), sum($"o_custkey").as("ck_sum"))
-        .orderBy($"o_orderstatus")
-      graft.operators.ResultCache.publish(s, shape)
-      val served = shape
-      require(served.inputFiles.forall(_.contains("result_cache")),
-        "the identical plan must serve through the transparent tier")
-      // the substituted plan is pinned (optimizedPlan memoizes); the
-      // rule must not tax every LATER query's optimization (r14
-      // wrong #4: gate-enabled session rules leaked into bench legs)
-      require(served.queryExecution.optimizedPlan != null)
-      served
-    } finally graft.plans.TransparentResultCache.disableForTest(s)
+    val f = Session.fork(s, Seq(new TransparentResultCacheRule(_)))
+    def shape = Tables(f, dir, "orders")
+      .groupBy($"o_orderstatus")
+      .agg(count(lit(1)).as("n"), sum($"o_custkey").as("ck_sum"))
+      .orderBy($"o_orderstatus")
+    graft.operators.ResultCache.publish(f, shape)
+    val served = shape
+    require(served.inputFiles.forall(_.contains("result_cache")),
+      "the identical plan must serve through the transparent tier")
+    served
   }
 
   /** q83 — TRANSPARENT JOIN STEERING ([[graft.plans
@@ -3823,25 +3810,17 @@ object RelationalQueries {
     SC.ensure(s, fix, "skew_fact")
     SC.ensure(s, fix, "skew_dim")
     SC.ensureKeyProfile(s, fix, "skew_fact", "k", hotFreq = 200L)
-    // budget scaled so the near-fact-sized dim can never broadcast
-    // (the q69 knob); the FULL returned frame's plan is forced and
-    // pinned BEFORE the rule unregisters, so the execution runs the
-    // steered shape while later queries optimize rule-clean (r14
-    // wrong #4)
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    try {
-      val fact = Tables(s, fix, "skew_fact")
-      val dim = Tables(s, fix, "skew_dim")
-      val served = fact.join(dim, fact("k") === dim("k"))
-        .groupBy(dim("seg").as("seg"))
-        .agg(count(lit(1)).as("n"),
-          sum(floor($"value").cast("long")).as("v_fp"))
-        .orderBy($"seg")
-      require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
-        "the plain join must be steered into the salted shape by the rule")
-      served
-    } finally graft.plans.TransparentJoinSteering.disableForTest(s)
+    val f = Session.fork(s, Seq(skewSteering))
+    val fact = Tables(f, fix, "skew_fact")
+    val dim = Tables(f, fix, "skew_dim")
+    val served = fact.join(dim, fact("k") === dim("k"))
+      .groupBy(dim("seg").as("seg"))
+      .agg(count(lit(1)).as("n"),
+        sum(floor($"value").cast("long")).as("v_fp"))
+      .orderBy($"seg")
+    require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
+      "the plain join must be steered into the salted shape by the rule")
+    served
   }
 
   /** q84 — ADVICE SURVIVES APPENDS AT O(batch) ([[graft.operators
@@ -3931,21 +3910,18 @@ object RelationalQueries {
     SC.ensure(s, fix, "skew_fact")
     SC.ensure(s, fix, "skew_dim")
     SC.ensureKeyProfile(s, fix, "skew_fact", "k", hotFreq = 200L)
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    try {
-      val fact = Tables(s, fix, "skew_fact")
-      val dim = Tables(s, fix, "skew_dim").where($"seg" =!= 3L)
-      val served = fact.join(dim, fact("k") === dim("k"), "left")
-        .groupBy(coalesce(dim("seg"), lit(-1L)).as("seg"))
-        .agg(count(lit(1)).as("n"),
-          count(dim("k")).as("matched"),
-          sum(floor($"value").cast("long")).as("v_fp"))
-        .orderBy($"seg")
-      require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
-        "the plain LEFT enrich must be steered into the salted shape")
-      served
-    } finally graft.plans.TransparentJoinSteering.disableForTest(s)
+    val f = Session.fork(s, Seq(skewSteering))
+    val fact = Tables(f, fix, "skew_fact")
+    val dim = Tables(f, fix, "skew_dim").where($"seg" =!= 3L)
+    val served = fact.join(dim, fact("k") === dim("k"), "left")
+      .groupBy(coalesce(dim("seg"), lit(-1L)).as("seg"))
+      .agg(count(lit(1)).as("n"),
+        count(dim("k")).as("matched"),
+        sum(floor($"value").cast("long")).as("v_fp"))
+      .orderBy($"seg")
+    require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
+      "the plain LEFT enrich must be steered into the salted shape")
+    served
   }
 
   /** q86 — CARDINALITY FEEDBACK ([[graft.operators.CardFeedback]] ×
@@ -4030,34 +4006,31 @@ object RelationalQueries {
     import s.implicits._
     val SC = graft.operators.StatsCatalog
     Seq("customer", "orders", "lineitem").foreach(SC.ensure(s, dir, _))
-    graft.plans.TransparentJoinOrdering.enable(s)
-    try {
-      val cu = Tables(s, dir, "customer").where($"c_custkey" <= 150L)
-      val or = Tables(s, dir, "orders")
-      val li = Tables(s, dir, "lineitem")
-      // the WORST declared order: the fact-fact pair first; the FULL
-      // frame's plan is forced and pinned before the rule unregisters
-      val served = li
-        .join(or, li("l_orderkey") === or("o_orderkey"))
-        .join(cu, or("o_custkey") === cu("c_custkey"))
-        .groupBy($"o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum($"l_extendedprice"), 2).as("rev"))
-        .orderBy($"o_orderstatus")
-      val deepest = served.queryExecution.optimizedPlan.collect {
-        case jn: org.apache.spark.sql.catalyst.plans.logical.Join => jn
-      }.last
-      val deepTables = deepest.collectLeaves().collect {
-        case rel: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          rel.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.head.getName.stripSuffix(".parquet")
-          }
-      }.toSet
-      require(deepTables == Set("customer", "orders"),
-        s"the rule must re-shape the worst declared order, innermost = $deepTables")
-      served
-    } finally graft.plans.TransparentJoinOrdering.disableForTest(s)
+    val f = Session.fork(s, Seq(new TransparentJoinOrderingRule(_)))
+    val cu = Tables(f, dir, "customer").where($"c_custkey" <= 150L)
+    val or = Tables(f, dir, "orders")
+    val li = Tables(f, dir, "lineitem")
+    // the WORST declared order: the fact-fact pair first
+    val served = li
+      .join(or, li("l_orderkey") === or("o_orderkey"))
+      .join(cu, or("o_custkey") === cu("c_custkey"))
+      .groupBy($"o_orderstatus")
+      .agg(count(lit(1)).as("n"),
+        round(sum($"l_extendedprice"), 2).as("rev"))
+      .orderBy($"o_orderstatus")
+    val deepest = served.queryExecution.optimizedPlan.collect {
+      case jn: org.apache.spark.sql.catalyst.plans.logical.Join => jn
+    }.last
+    val deepTables = deepest.collectLeaves().collect {
+      case rel: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        rel.relation match {
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            fs.location.rootPaths.head.getName.stripSuffix(".parquet")
+        }
+    }.toSet
+    require(deepTables == Set("customer", "orders"),
+      s"the rule must re-shape the worst declared order, innermost = $deepTables")
+    served
   }
 
   /** q88 — APPROXIMATE QUERY PROCESSING OVER A DETERMINISTIC SAMPLE
@@ -4169,8 +4142,8 @@ object RelationalQueries {
     * a ~n/3-row probe; the MCV tier prices it truly. The oracle
     * replays the order-invariant join in DuckDB — the flip is
     * result-invisible, which is the proof every learned rewrite
-    * owes. The gate restores the config and unregisters the rule so
-    * later queries run algebra-clean (r14 wrong #4). */
+    * owes. The config and the rule live on the query's session fork,
+    * so later queries on the shared session run algebra-clean. */
   val q90LearnedOrdering: GraftQuery = q(
     "q90_learned_ordering",
     "one MCV artifact flips the transparent join order via session-config tiers; oracle replays the order-invariant join",
@@ -4195,11 +4168,12 @@ object RelationalQueries {
     val fix = graft.operators.Steering.ensureOrderTierFixture(s, dir)
     Seq("skew_fact", "ord_b", "ord_c").foreach(SC.ensure(s, fix, _))
     SC.ensureMcv(s, fix, "skew_fact", "k")
-    graft.plans.TransparentJoinOrdering.enable(s)
-    def shape = {
-      val a = Tables(s, fix, "skew_fact").where($"k" === -1L)
-      val b = Tables(s, fix, "ord_b")
-      val c = Tables(s, fix, "ord_c")
+    def shape(tiers: String) = {
+      val f = Session.fork(s, Seq(new TransparentJoinOrderingRule(_)),
+        Map("spark.graft.ordering.tiers" -> tiers))
+      val a = Tables(f, fix, "skew_fact").where($"k" === -1L)
+      val b = Tables(f, fix, "ord_b")
+      val c = Tables(f, fix, "ord_c")
       a.join(b, a("event_id") === b("event_id"))
         .join(c, b("b_g") === c("g"))
         .groupBy(pmod(b("b_g"), lit(7L)).as("grp"))
@@ -4219,23 +4193,12 @@ object RelationalQueries {
           }
       }.toSet
     }
-    val prev = s.conf.getOption("spark.graft.ordering.tiers")
-    try {
-      s.conf.unset("spark.graft.ordering.tiers")
-      require(innermost(shape) == Set("skew_fact", "ord_b"),
-        "with tiers unset the uniform algebra keeps the declared order")
-      s.conf.set("spark.graft.ordering.tiers", "mcv")
-      val served = shape
-      require(innermost(served) == Set("ord_b", "ord_c"),
-        "one MCV artifact must flip the transparent order to seed the dim join")
-      served
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.graft.ordering.tiers", v)
-        case None => s.conf.unset("spark.graft.ordering.tiers")
-      }
-      graft.plans.TransparentJoinOrdering.disableForTest(s)
-    }
+    require(innermost(shape(tiers = "")) == Set("skew_fact", "ord_b"),
+      "with tiers unset the uniform algebra keeps the declared order")
+    val served = shape(tiers = "mcv")
+    require(innermost(served) == Set("ord_b", "ord_c"),
+      "one MCV artifact must flip the transparent order to seed the dim join")
+    served
   }
 
   /** q91 — THE CATALOG SURFACE GETS THE ENGINE BRAIN ([[graft.plans
@@ -4282,18 +4245,15 @@ object RelationalQueries {
     s.sql("DROP TABLE IF EXISTS graft_cat_fact")
     s.sql(s"CREATE TABLE graft_cat_fact USING parquet LOCATION '$catPath'")
     Tables(s, fix, "skew_dim").createOrReplaceTempView("graft_cat_dim")
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    try {
-      val served = s.sql(
-        """SELECT d.seg, count(*) AS n, count(DISTINCT f.k) AS keys,
-          |       sum(CAST(floor(f.value) AS BIGINT)) AS v_fp
-          |FROM graft_cat_fact f JOIN graft_cat_dim d ON f.k = d.k
-          |GROUP BY d.seg ORDER BY d.seg""".stripMargin)
-      require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
-        "the catalog-table join must be steered through the registered identity")
-      served
-    } finally graft.plans.TransparentJoinSteering.disableForTest(s)
+    // the fork carries the parent's temp view
+    val served = Session.fork(s, Seq(skewSteering)).sql(
+      """SELECT d.seg, count(*) AS n, count(DISTINCT f.k) AS keys,
+        |       sum(CAST(floor(f.value) AS BIGINT)) AS v_fp
+        |FROM graft_cat_fact f JOIN graft_cat_dim d ON f.k = d.k
+        |GROUP BY d.seg ORDER BY d.seg""".stripMargin)
+    require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
+      "the catalog-table join must be steered through the registered identity")
+    served
   }
 
   /** q92 — COMPOSITE-KEY JOINS GET THE BROADCAST ARM
@@ -4327,27 +4287,21 @@ object RelationalQueries {
     val fix = graft.operators.Steering.ensureCompositeFixture(s, dir)
     SC.ensure(s, fix, "comp_fact")
     SC.ensure(s, fix, "comp_dim")
-    graft.plans.TransparentJoinSteering.enable(s)
-    val prior = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val fact = Tables(s, fix, "comp_fact")
-      val dim = Tables(s, fix, "comp_dim")
-      val served = fact
-        .join(dim, fact("g1") === dim("g1") && fact("g2") === dim("g2"))
-        .groupBy(dim("seg").as("seg"))
-        .agg(count(lit(1)).as("n"),
-          sum(floor($"value").cast("long")).as("v_fp"))
-        .orderBy($"seg")
-      require(served.queryExecution.executedPlan.toString
-        .contains("BroadcastHashJoin"),
-        "with size-based broadcast disabled, only the rule's hint can " +
-          "produce a BroadcastHashJoin on the composite key")
-      served
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-      graft.plans.TransparentJoinSteering.disableForTest(s)
-    }
+    val f = Session.fork(s, Seq(new TransparentJoinSteeringRule(_)),
+      Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    val fact = Tables(f, fix, "comp_fact")
+    val dim = Tables(f, fix, "comp_dim")
+    val served = fact
+      .join(dim, fact("g1") === dim("g1") && fact("g2") === dim("g2"))
+      .groupBy(dim("seg").as("seg"))
+      .agg(count(lit(1)).as("n"),
+        sum(floor($"value").cast("long")).as("v_fp"))
+      .orderBy($"seg")
+    require(served.queryExecution.executedPlan.toString
+      .contains("BroadcastHashJoin"),
+      "with size-based broadcast disabled, only the rule's hint can " +
+        "produce a BroadcastHashJoin on the composite key")
+    served
   }
 
   /** q93 — TOLERANCE-DECLARED AQP SERVING ([[graft.operators
@@ -4435,34 +4389,23 @@ object RelationalQueries {
     SC.ensure(s, fix, "mcv_fact")
     SC.ensure(s, fix, "mcv_dim")
     SC.ensureMcv(s, fix, "mcv_fact", "k")
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    val prev = s.conf.getOption("spark.graft.steering.tiers")
-    try {
-      def shape = {
-        val fact = Tables(s, fix, "mcv_fact")
-        val dim = Tables(s, fix, "mcv_dim")
-        fact.join(dim, fact("k") === dim("k"))
-          .groupBy(dim("seg").as("seg"))
-          .agg(count(lit(1)).as("n"),
-            sum(floor($"value").cast("long")).as("v_fp"))
-          .orderBy($"seg")
-      }
-      s.conf.unset("spark.graft.steering.tiers")
-      require(!shape.queryExecution.optimizedPlan.toString.contains("__salt_f"),
-        "with no profile and the tier unset, the mean-frequency algebra passes through")
-      s.conf.set("spark.graft.steering.tiers", "mcv")
-      val served = shape
-      require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
-        "the MCV tier must diagnose the skew and salt the hot key")
-      served
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.graft.steering.tiers", v)
-        case None => s.conf.unset("spark.graft.steering.tiers")
-      }
-      graft.plans.TransparentJoinSteering.disableForTest(s)
+    def shape(tiers: String) = {
+      val f = Session.fork(s, Seq(skewSteering),
+        Map("spark.graft.steering.tiers" -> tiers))
+      val fact = Tables(f, fix, "mcv_fact")
+      val dim = Tables(f, fix, "mcv_dim")
+      fact.join(dim, fact("k") === dim("k"))
+        .groupBy(dim("seg").as("seg"))
+        .agg(count(lit(1)).as("n"),
+          sum(floor($"value").cast("long")).as("v_fp"))
+        .orderBy($"seg")
     }
+    require(!shape(tiers = "").queryExecution.optimizedPlan.toString.contains("__salt_f"),
+      "with no profile and the tier unset, the mean-frequency algebra passes through")
+    val served = shape(tiers = "mcv")
+    require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
+      "the MCV tier must diagnose the skew and salt the hot key")
+    served
   }
 
   /** q95 — TOLERANCE-DECLARED APPROXIMATE SUMS ([[graft.operators
@@ -4654,25 +4597,22 @@ object RelationalQueries {
     SC.ensure(s, fix, "skew_fact")
     SC.ensure(s, fix, "skew_dim")
     SC.ensureKeyProfile(s, fix, "skew_fact", "k", hotFreq = 200L)
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    try {
-      def leg(kind: String, label: String) = {
-        val fact = Tables(s, fix, "skew_fact")
-        val dim = Tables(s, fix, "skew_dim").where($"seg" =!= 3L)
-        fact.join(dim, fact("k") === dim("k"), kind)
-          .agg(count(lit(1)).as("n"),
-            sum(floor($"value").cast("long")).as("v_fp"))
-          .select(lit(label).as("leg"), $"n", $"v_fp")
-      }
-      val semi = leg("left_semi", "semi")
-      val anti = leg("left_anti", "anti")
-      require(semi.queryExecution.optimizedPlan.toString.contains("__salt_f"),
-        "the plain LEFT SEMI join must be steered into the salted shape")
-      require(anti.queryExecution.optimizedPlan.toString.contains("__salt_f"),
-        "the plain LEFT ANTI join must be steered into the salted shape")
-      anti.unionByName(semi).orderBy($"leg")
-    } finally graft.plans.TransparentJoinSteering.disableForTest(s)
+    val f = Session.fork(s, Seq(skewSteering))
+    def leg(kind: String, label: String) = {
+      val fact = Tables(f, fix, "skew_fact")
+      val dim = Tables(f, fix, "skew_dim").where($"seg" =!= 3L)
+      fact.join(dim, fact("k") === dim("k"), kind)
+        .agg(count(lit(1)).as("n"),
+          sum(floor($"value").cast("long")).as("v_fp"))
+        .select(lit(label).as("leg"), $"n", $"v_fp")
+    }
+    val semi = leg("left_semi", "semi")
+    val anti = leg("left_anti", "anti")
+    require(semi.queryExecution.optimizedPlan.toString.contains("__salt_f"),
+      "the plain LEFT SEMI join must be steered into the salted shape")
+    require(anti.queryExecution.optimizedPlan.toString.contains("__salt_f"),
+      "the plain LEFT ANTI join must be steered into the salted shape")
+    anti.unionByName(semi).orderBy($"leg")
   }
 
   /** q98 — O(batch)-MAINTAINED MCV LISTS FEED THE LEARNED TIER
@@ -4712,28 +4652,18 @@ object RelationalQueries {
     require(SM.mcvMaintIfCurrent(s, fix, "mcvm_fact", "k")
         .exists(_.headOption.exists(_._1 == "-7")),
       "the maintained MCV list must rank the hot value first")
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    val prev = s.conf.getOption("spark.graft.steering.tiers")
-    try {
-      s.conf.set("spark.graft.steering.tiers", "mcv")
-      val fact = Tables(s, fix, "mcvm_fact")
-      val dim = Tables(s, fix, "mcvm_dim")
-      val served = fact.join(dim, fact("k") === dim("k"))
-        .groupBy(dim("seg").as("seg"))
-        .agg(count(lit(1)).as("n"),
-          sum(floor($"value").cast("long")).as("v_fp"))
-        .orderBy($"seg")
-      require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
-        "the maintained MCV tier must diagnose the skew and salt the hot key across the append")
-      served
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.graft.steering.tiers", v)
-        case None => s.conf.unset("spark.graft.steering.tiers")
-      }
-      graft.plans.TransparentJoinSteering.disableForTest(s)
-    }
+    val f = Session.fork(s, Seq(skewSteering),
+      Map("spark.graft.steering.tiers" -> "mcv"))
+    val fact = Tables(f, fix, "mcvm_fact")
+    val dim = Tables(f, fix, "mcvm_dim")
+    val served = fact.join(dim, fact("k") === dim("k"))
+      .groupBy(dim("seg").as("seg"))
+      .agg(count(lit(1)).as("n"),
+        sum(floor($"value").cast("long")).as("v_fp"))
+      .orderBy($"seg")
+    require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
+      "the maintained MCV tier must diagnose the skew and salt the hot key across the append")
+    served
   }
 
   /** q99 — WHOLE-BRAIN COMPOSITION (the r15 verdict's #2): every
@@ -4743,10 +4673,10 @@ object RelationalQueries {
     * and the result cache (D90) — enabled in ONE session together
     * with BOTH learned-tier configs, each gate-representative shape
     * run under the full stack and require()-pinned to the rewrite it
-    * owns. Until now each rule was gated in isolation (`pinThen`
-    * enables → pins → unregisters), so rule-ordering interactions —
-    * the exact class of bug a fixed-point batch of seven rewrites
-    * can hide — were untested. The composition disciplines this
+    * owns. Every other gate installs one rule, so rule-ordering
+    * interactions — the exact class of bug a fixed-point batch of
+    * seven rewrites can hide — are tested here. The composition
+    * disciplines this
     * pins: dictionary routing DECLINES rollup-servable shapes (the
     * routed count must come from hist_daily, not code space), the
     * ordering rule reorders before the steering rule dispatches,
@@ -4810,7 +4740,6 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     val SC = graft.operators.StatsCatalog
-    import graft.{plans => P}
     // ---- artifacts every rule needs (all idempotent per fingerprint)
     graft.operators.HistogramRollup.ensure(s, dir)
     graft.operators.Dictionary.ensure(s, dir, "events", "event_type")
@@ -4821,136 +4750,110 @@ object RelationalQueries {
     SC.ensure(s, fix, "skew_fact")
     SC.ensure(s, fix, "skew_dim")
     SC.ensureKeyProfile(s, fix, "skew_fact", "k", hotFreq = 200L)
-    // ---- the whole brain, one session: registration order puts the
-    // rollup router before the dictionary router (the shared-shape
-    // tie the dict rule's rollupServable screen already declines —
-    // pinned below), ordering before steering (enable() inserts it
-    // so), the cache last
-    P.RollupRouting.enable(s)
-    P.DictionaryRouting.enable(s)
-    P.FdAggregation.enable(s)
-    P.JoinElimination.enable(s)
-    P.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    P.TransparentJoinOrdering.enable(s)
-    P.TransparentResultCache.enable(s)
-    val prevOrd = s.conf.getOption("spark.graft.ordering.tiers")
-    val prevSteer = s.conf.getOption("spark.graft.steering.tiers")
-    s.conf.set("spark.graft.ordering.tiers", "mcv,feedback")
-    s.conf.set("spark.graft.steering.tiers", "mcv")
-    try {
-      def shaped(label: String, df: org.apache.spark.sql.DataFrame,
-          key: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column,
-          v: org.apache.spark.sql.Column) =
-        df.select(lit(label).as("shape"), key.cast("string").as("key"),
-          n.as("n"), v.cast("double").as("v"))
-      // ROUTED: the plain windowed count must come from the rollup —
-      // and NOT from code space (the dict rule declines it)
-      val routed = Tables(s, dir, "events")
-        .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-08 00:00:00")) &&
-          $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-18 00:00:00")))
-        .groupBy($"event_type").agg(count(lit(1)).as("n"))
-      require(routed.inputFiles.exists(_.contains("hist_daily")) &&
-          !routed.inputFiles.exists(_.contains("events.parquet")),
-        "composed: the rollup router must win the windowed count")
-      // DICT: countDistinct keeps it out of the rollup's reach; the
-      // dictionary router must encode it
-      val dict = Tables(s, dir, "events")
-        .groupBy($"event_type")
-        .agg(countDistinct($"user_id").as("users"), count(lit(1)).as("n"))
-      require(dict.inputFiles.exists(_.contains("dict_events_event_type")),
-        "composed: the dictionary router must encode the distinct aggregate")
-      // FD: the determined display column leaves the grouping key
-      val fd = Tables(s, dir, "customer")
-        .join(Tables(s, dir, "nation"), $"c_nationkey" === $"n_nationkey")
-        .groupBy($"n_nationkey", $"n_name")
-        .agg(count(lit(1)).as("customers"),
-          round(sum($"c_acctbal"), 2).as("bal"))
-      require(fd.queryExecution.optimizedPlan.toString.contains("max(n_name"),
-        "composed: the FD rule must reduce the grouping key")
-      // STEERED: the plain skew join salts
-      val fact = Tables(s, fix, "skew_fact")
-      val dim = Tables(s, fix, "skew_dim")
-      val steered = fact.join(dim, fact("k") === dim("k"))
-        .groupBy(dim("seg").as("seg"))
-        .agg(count(lit(1)).as("n"),
-          sum(floor($"value").cast("long")).as("v_fp"))
-      require(steered.queryExecution.optimizedPlan.toString.contains("__salt_f"),
-        "composed: the steering rule must salt the hot key")
-      // ORDERED: the worst declared chain re-shapes (customer–orders
-      // innermost) with the learned tiers ON
-      val cu = Tables(s, dir, "customer").where($"c_custkey" <= 150L)
-      val or = Tables(s, dir, "orders")
-      val li = Tables(s, dir, "lineitem")
-      val ordered = li
-        .join(or, li("l_orderkey") === or("o_orderkey"))
-        .join(cu, or("o_custkey") === cu("c_custkey"))
-        .groupBy($"o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum($"l_extendedprice"), 2).as("rev"))
-      val deepest = ordered.queryExecution.optimizedPlan.collect {
-        case jn: org.apache.spark.sql.catalyst.plans.logical.Join => jn
-      }.last
-      val deepTables = deepest.collectLeaves().collect {
-        case rel: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          rel.relation match {
-            case hfs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              hfs.location.rootPaths.head.getName.stripSuffix(".parquet")
-          }
-      }.toSet
-      require(deepTables == Set("customer", "orders"),
-        s"composed: the ordering rule must re-shape the chain, innermost = $deepTables")
-      // CACHED: a published result substitutes into the identical
-      // plan — keyed on the post-every-other-rule optimized form
-      def cachedShape = Tables(s, dir, "orders")
-        .groupBy($"o_orderstatus")
-        .agg(count(lit(1)).as("n"), sum($"o_custkey").as("ck_sum"))
-      graft.operators.ResultCache.publish(s, cachedShape)
-      val cached = cachedShape
-      require(cached.inputFiles.forall(_.contains("result_cache")),
-        "composed: the identical plan must serve through the cache")
-      // ELIMINATED: the unused unique-key LEFT join disappears
-      val cust = Tables(s, dir, "customer")
-      val nat = Tables(s, dir, "nation")
-      val elim = cust
-        .join(nat, cust("c_nationkey") === nat("n_nationkey"), "left")
-        .groupBy($"c_mktsegment")
-        .agg(count(lit(1)).as("n"), round(sum($"c_acctbal"), 2).as("bal"))
-      require(!elim.queryExecution.optimizedPlan.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "composed: the elimination rule must drop the unused join")
-      // one frame, one hash: the union's own plan is forced while the
-      // full stack is registered (the pinThen discipline)
-      val out = shaped("routed", routed, $"event_type", $"n", lit(0.0))
-        .unionByName(shaped("dict", dict, $"event_type", $"n",
-          $"users".cast("double")))
-        .unionByName(shaped("fd", fd, $"n_name", $"customers", $"bal"))
-        .unionByName(shaped("steered", steered, $"seg", $"n",
-          $"v_fp".cast("double")))
-        .unionByName(shaped("ordered", ordered, $"o_orderstatus", $"n", $"rev"))
-        .unionByName(shaped("cached", cached, $"o_orderstatus", $"n",
-          $"ck_sum".cast("double")))
-        .unionByName(shaped("eliminated", elim, $"c_mktsegment", $"n", $"bal"))
-        .orderBy($"shape", $"key")
-      out.queryExecution.optimizedPlan
-      out
-    } finally {
-      prevOrd match {
-        case Some(v) => s.conf.set("spark.graft.ordering.tiers", v)
-        case None => s.conf.unset("spark.graft.ordering.tiers")
-      }
-      prevSteer match {
-        case Some(v) => s.conf.set("spark.graft.steering.tiers", v)
-        case None => s.conf.unset("spark.graft.steering.tiers")
-      }
-      P.RollupRouting.disableForTest(s)
-      P.DictionaryRouting.disableForTest(s)
-      P.FdAggregation.disableForTest(s)
-      P.JoinElimination.disableForTest(s)
-      P.TransparentJoinSteering.disableForTest(s)
-      P.TransparentJoinOrdering.disableForTest(s)
-      P.TransparentResultCache.disableForTest(s)
-    }
+    // ---- the whole brain on one fork: Session's install order puts
+    // the rollup router before the dictionary router (the
+    // shared-shape tie the dict rule's rollupServable screen already
+    // declines — pinned below), ordering before steering, the cache
+    // last
+    val f = Session.fork(s,
+      Seq(new RollupRoutingRule(_), new DictionaryRoutingRule(_),
+        new FdAggregationRule(_), new JoinEliminationRule(_), skewSteering,
+        new TransparentJoinOrderingRule(_), new TransparentResultCacheRule(_)),
+      Map("spark.graft.ordering.tiers" -> "mcv,feedback",
+        "spark.graft.steering.tiers" -> "mcv"))
+    def shaped(label: String, df: org.apache.spark.sql.DataFrame,
+        key: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column,
+        v: org.apache.spark.sql.Column) =
+      df.select(lit(label).as("shape"), key.cast("string").as("key"),
+        n.as("n"), v.cast("double").as("v"))
+    // ROUTED: the plain windowed count must come from the rollup —
+    // and NOT from code space (the dict rule declines it)
+    val routed = Tables(f, dir, "events")
+      .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-08 00:00:00")) &&
+        $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-18 00:00:00")))
+      .groupBy($"event_type").agg(count(lit(1)).as("n"))
+    require(routed.inputFiles.exists(_.contains("hist_daily")) &&
+        !routed.inputFiles.exists(_.contains("events.parquet")),
+      "composed: the rollup router must win the windowed count")
+    // DICT: countDistinct keeps it out of the rollup's reach; the
+    // dictionary router must encode it
+    val dict = Tables(f, dir, "events")
+      .groupBy($"event_type")
+      .agg(countDistinct($"user_id").as("users"), count(lit(1)).as("n"))
+    require(dict.inputFiles.exists(_.contains("dict_events_event_type")),
+      "composed: the dictionary router must encode the distinct aggregate")
+    // FD: the determined display column leaves the grouping key
+    val fd = Tables(f, dir, "customer")
+      .join(Tables(f, dir, "nation"), $"c_nationkey" === $"n_nationkey")
+      .groupBy($"n_nationkey", $"n_name")
+      .agg(count(lit(1)).as("customers"),
+        round(sum($"c_acctbal"), 2).as("bal"))
+    require(fd.queryExecution.optimizedPlan.toString.contains("max(n_name"),
+      "composed: the FD rule must reduce the grouping key")
+    // STEERED: the plain skew join salts
+    val fact = Tables(f, fix, "skew_fact")
+    val dim = Tables(f, fix, "skew_dim")
+    val steered = fact.join(dim, fact("k") === dim("k"))
+      .groupBy(dim("seg").as("seg"))
+      .agg(count(lit(1)).as("n"),
+        sum(floor($"value").cast("long")).as("v_fp"))
+    require(steered.queryExecution.optimizedPlan.toString.contains("__salt_f"),
+      "composed: the steering rule must salt the hot key")
+    // ORDERED: the worst declared chain re-shapes (customer–orders
+    // innermost) with the learned tiers ON
+    val cu = Tables(f, dir, "customer").where($"c_custkey" <= 150L)
+    val or = Tables(f, dir, "orders")
+    val li = Tables(f, dir, "lineitem")
+    val ordered = li
+      .join(or, li("l_orderkey") === or("o_orderkey"))
+      .join(cu, or("o_custkey") === cu("c_custkey"))
+      .groupBy($"o_orderstatus")
+      .agg(count(lit(1)).as("n"),
+        round(sum($"l_extendedprice"), 2).as("rev"))
+    val deepest = ordered.queryExecution.optimizedPlan.collect {
+      case jn: org.apache.spark.sql.catalyst.plans.logical.Join => jn
+    }.last
+    val deepTables = deepest.collectLeaves().collect {
+      case rel: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        rel.relation match {
+          case hfs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            hfs.location.rootPaths.head.getName.stripSuffix(".parquet")
+        }
+    }.toSet
+    require(deepTables == Set("customer", "orders"),
+      s"composed: the ordering rule must re-shape the chain, innermost = $deepTables")
+    // CACHED: a published result substitutes into the identical
+    // plan — keyed on the post-every-other-rule optimized form
+    def cachedShape = Tables(f, dir, "orders")
+      .groupBy($"o_orderstatus")
+      .agg(count(lit(1)).as("n"), sum($"o_custkey").as("ck_sum"))
+    graft.operators.ResultCache.publish(f, cachedShape)
+    val cached = cachedShape
+    require(cached.inputFiles.forall(_.contains("result_cache")),
+      "composed: the identical plan must serve through the cache")
+    // ELIMINATED: the unused unique-key LEFT join disappears
+    val cust = Tables(f, dir, "customer")
+    val nat = Tables(f, dir, "nation")
+    val elim = cust
+      .join(nat, cust("c_nationkey") === nat("n_nationkey"), "left")
+      .groupBy($"c_mktsegment")
+      .agg(count(lit(1)).as("n"), round(sum($"c_acctbal"), 2).as("bal"))
+    require(!elim.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
+      "composed: the elimination rule must drop the unused join")
+    // one frame, one hash
+    val out = shaped("routed", routed, $"event_type", $"n", lit(0.0))
+      .unionByName(shaped("dict", dict, $"event_type", $"n",
+        $"users".cast("double")))
+      .unionByName(shaped("fd", fd, $"n_name", $"customers", $"bal"))
+      .unionByName(shaped("steered", steered, $"seg", $"n",
+        $"v_fp".cast("double")))
+      .unionByName(shaped("ordered", ordered, $"o_orderstatus", $"n", $"rev"))
+      .unionByName(shaped("cached", cached, $"o_orderstatus", $"n",
+        $"ck_sum".cast("double")))
+      .unionByName(shaped("eliminated", elim, $"c_mktsegment", $"n", $"bal"))
+      .orderBy($"shape", $"key")
+    out
   }
 
   /** q100 — TOLERANCE-DECLARED FLOOR-AVERAGES + THE EXACT ROLLUP
@@ -5123,31 +5026,25 @@ object RelationalQueries {
     val SC = graft.operators.StatsCatalog
     SC.ensure(s, dir, "orders")
     SC.ensure(s, dir, "lineitem")
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8,
-      hashBytes = 8L * 1024 * 1024 * 1024)
-    val prior = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      def leg(kind: String, label: String) = {
-        val or = Tables(s, dir, "orders")
-        val li = Tables(s, dir, "lineitem").where($"l_quantity" > 45.0)
-        val f = or.join(li, or("o_orderkey") === li("l_orderkey"), kind)
-          .agg(count(lit(1)).as("n"), sum($"o_custkey").as("fp"))
-          .select(lit(label).as("leg"), $"n", $"fp")
-        val phys = f.queryExecution.executedPlan.toString
-        require(phys.contains("ShuffledHashJoin") &&
-            phys.contains("BuildRight"),
-          s"the $kind leg must take the shuffled-hash build-right arm:\n$phys")
-        f
-      }
-      val anti = leg("left_anti", "anti")
-      val semi = leg("left_semi", "semi")
-      anti.unionByName(semi).orderBy($"leg")
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-      graft.plans.TransparentJoinSteering.disableForTest(s)
+    val f = Session.fork(s,
+      Seq(new TransparentJoinSteeringRule(_, broadcastBytes = 1024L,
+        hashBytes = 8L * 1024 * 1024 * 1024)),
+      Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    def leg(kind: String, label: String) = {
+      val or = Tables(f, dir, "orders")
+      val li = Tables(f, dir, "lineitem").where($"l_quantity" > 45.0)
+      val df = or.join(li, or("o_orderkey") === li("l_orderkey"), kind)
+        .agg(count(lit(1)).as("n"), sum($"o_custkey").as("fp"))
+        .select(lit(label).as("leg"), $"n", $"fp")
+      val phys = df.queryExecution.executedPlan.toString
+      require(phys.contains("ShuffledHashJoin") &&
+          phys.contains("BuildRight"),
+        s"the $kind leg must take the shuffled-hash build-right arm:\n$phys")
+      df
     }
+    val anti = leg("left_anti", "anti")
+    val semi = leg("left_semi", "semi")
+    anti.unionByName(semi).orderBy($"leg")
   }
 
   /** q103 — GENERIC PER-GROUP QUANTILES FROM A GROUP HISTOGRAM

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -37,13 +36,7 @@ object StreamingBench {
     val rows = if (args.length > 0) args(0).toLong else 400000L
     val chunks = if (args.length > 1) args(1).toInt else 10
     val maxFiles = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.profile()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.taxi._
 
 /** Runnable end-to-end demo of the batch lambda path — the library
@@ -14,12 +13,7 @@ import graft.taxi._
 object TaxiPipelineDemo {
   def main(args: Array[String]): Unit = {
     val Array(tripsCsv, commAreasCsv, areasCsv, workDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.profile()
     spark.sparkContext.setLogLevel("WARN")
 
     IngestHistoricJob.run(spark, tripsCsv, s"$workDir/trips")

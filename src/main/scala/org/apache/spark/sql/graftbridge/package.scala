@@ -20,4 +20,10 @@ package object graftbridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The `private[sql]` session clone: shared SparkContext and shared
+    * state, a private copy of the runtime conf, temp views,
+    * extra optimizations and execution listeners. */
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

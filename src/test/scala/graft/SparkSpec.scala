@@ -5,16 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite run (Spark sessions
   * are expensive; ScalaTest suites run sequentially in the forked
-  * JVM). */
+  * JVM), under the engine's profile at a fixed 4 cores. */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.profile(cores = 4)
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -52,16 +52,18 @@ class RuntimeFilterSpec extends SparkSpec {
   test("GraftCatalog: layer selection builds only what was asked; warm registration runs zero jobs (r16)") {
     withIndexRoot("graft-cat-lazy") {
       // cold host, ONE layer asked: only that artifact builds, only
-      // that view registers
-      graft.GraftCatalog.registerRollups(spark, sf, layers = Seq("hll_daily"))
-      assert(spark.catalog.tableExists("hll_daily"))
+      // that view registers (on a fork: registration installs routing
+      // session-wide, which must not reach the shared test session)
+      val catalog = graft.Session.fork(spark, Nil)
+      graft.GraftCatalog.registerRollups(catalog, sf, layers = Seq("hll_daily"))
+      assert(catalog.catalog.tableExists("hll_daily"))
       assert(!IndexStore.artifactReady(HistogramRollup.histPath(sf)),
         "an unchosen layer must not pay its build scan")
-      assert(!spark.catalog.tableExists("hist_daily"),
+      assert(!catalog.catalog.tableExists("hist_daily"),
         "an unchosen layer must not register")
       // a typo fails loud, never silently registers nothing
       intercept[IllegalArgumentException] {
-        graft.GraftCatalog.registerRollups(spark, sf, layers = Seq("hll_dailyy"))
+        graft.GraftCatalog.registerRollups(catalog, sf, layers = Seq("hll_dailyy"))
       }
       // WARM re-registration of the chosen layer runs ZERO jobs: the
       // ensure guard is FS metadata and the view is a lazy plan
@@ -74,7 +76,7 @@ class RuntimeFilterSpec extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(listener)
       try {
-        graft.GraftCatalog.registerRollups(spark, sf, layers = Seq("hll_daily"))
+        graft.GraftCatalog.registerRollups(catalog, sf, layers = Seq("hll_daily"))
         Thread.sleep(300) // let the listener bus drain
       } finally spark.sparkContext.removeSparkListener(listener)
       assert(jobs.get === 0L,
@@ -84,36 +86,39 @@ class RuntimeFilterSpec extends SparkSpec {
 
   test("GraftCatalog: rollup layers queryable through plain spark.sql") {
     withIndexRoot("graft-cat-roll") {
-      graft.GraftCatalog.registerRollups(spark, sf)
+      // registration installs views and routing session-wide: do it
+      // on a fork so the shared test session stays rule-free
+      val catalog = graft.Session.fork(spark, Nil)
+      graft.GraftCatalog.registerRollups(catalog, sf)
       // a dashboard merging the HLL sketch over a window, pure SQL —
       // register-wise max is all it needs from the view
-      val regs = spark.sql("""
+      val regs = catalog.sql("""
         SELECT event_type, count(*) AS regs
         FROM (SELECT event_type, reg, max(rho)
               FROM hll_daily GROUP BY event_type, reg)
         GROUP BY event_type""").collect()
       assert(regs.nonEmpty && regs.forall(_.getLong(1) > 0))
-      val bins = spark.sql(
+      val bins = catalog.sql(
         "SELECT sum(cnt) FROM hist_daily").head().getLong(0)
       assert(bins === graft.Tables(spark, sf, "events").count(),
         "histogram counts must cover the whole table")
-      val files = spark.sql("SELECT count(*) FROM file_stats").head().getLong(0)
+      val files = catalog.sql("SELECT count(*) FROM file_stats").head().getLong(0)
       assert(files > 0)
       // the round-10 layers answer through plain SQL too
-      val vfp = spark.sql("SELECT sum(cnt) FROM agg_daily").head().getLong(0)
+      val vfp = catalog.sql("SELECT sum(cnt) FROM agg_daily").head().getLong(0)
       assert(vfp === graft.Tables(spark, sf, "events").count(),
         "agg_daily counts must cover the whole table")
-      val kmv = spark.sql(
+      val kmv = catalog.sql(
         "SELECT count(*) FROM kmv_daily").head().getLong(0)
       assert(kmv > 0)
-      val cms = spark.sql("SELECT sum(c) FROM cms_daily").head().getLong(0)
+      val cms = catalog.sql("SELECT sum(c) FROM cms_daily").head().getLong(0)
       assert(cms === graft.Tables(spark, sf, "events").count() *
         graft.operators.CmsRollup.Depth,
         "cms grid mass must be Depth counters per event")
       // and a dashboard's PLAIN raw aggregate over the events view is
       // served scan-free by the enabled routing rule
-      graft.GraftCatalog.registerAll(spark, sf)
-      val routed = spark.sql("""
+      graft.GraftCatalog.registerAll(catalog, sf)
+      val routed = catalog.sql("""
         SELECT event_type, count(*) AS n FROM events
         WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'
           AND ts <  TIMESTAMP '2024-01-18 00:00:00'
@@ -129,7 +134,6 @@ class RuntimeFilterSpec extends SparkSpec {
       assert(paths.exists(_.contains("hist_daily")) &&
         !paths.exists(_.contains("events.parquet")),
         s"the SQL dashboard aggregate must route to the rollup: $paths")
-      graft.plans.RollupRouting.disableForTest(spark)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 
@@ -17,8 +18,11 @@ class DictionaryRoutingSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def shape() =
-    graft.Tables(spark, sf, "events")
+  /** The shared session with the dictionary router installed. */
+  private def routing = Session.fork(spark, Seq(new DictionaryRoutingRule(_)))
+
+  private def shape(s: SparkSession) =
+    graft.Tables(s, sf, "events")
       .groupBy($"event_type")
       .agg(countDistinct($"user_id").as("users"), count(lit(1)).as("n"))
       .orderBy($"event_type")
@@ -30,49 +34,44 @@ class DictionaryRoutingSpec extends SparkSpec {
 
   test("the plain string GROUP BY routes to code space and back") {
     withIndexRoot("graft-dictroute") {
-      try {
-        val truth = shape().collect().map(_.toString).toSeq
-        Dictionary.ensure(spark, sf, "events", "event_type")
-        DictionaryRouting.enable(spark)
-        val routed = shape()
-        // the aggregate now groups by the dictionary CODE, not the
-        // string — longs through every exchange
-        assert(groupKeys(routed).contains("code"),
-          s"expected a code-space aggregate:\n${routed.queryExecution.optimizedPlan}")
-        assert(routed.queryExecution.executedPlan.toString
-          .contains("hashpartitioning(code"),
-          "the exchange must move codes")
-        // and the serve is bit-identical to value space
-        assert(routed.collect().map(_.toString).toSeq === truth)
-      } finally DictionaryRouting.disableForTest(spark)
+      val truth = shape(spark).collect().map(_.toString).toSeq
+      Dictionary.ensure(spark, sf, "events", "event_type")
+      val routed = shape(routing)
+      // the aggregate now groups by the dictionary CODE, not the
+      // string — longs through every exchange
+      assert(groupKeys(routed).contains("code"),
+        s"expected a code-space aggregate:\n${routed.queryExecution.optimizedPlan}")
+      assert(routed.queryExecution.executedPlan.toString
+        .contains("hashpartitioning(code"),
+        "the exchange must move codes")
+      // and the serve is bit-identical to value space
+      assert(routed.collect().map(_.toString).toSeq === truth)
     }
   }
 
   test("fail-closed vetoes: no artifact, broken watermark, unsafe shapes") {
     withIndexRoot("graft-dictroute-veto") {
-      try {
-        DictionaryRouting.enable(spark)
-        // no dictionary artifact: untouched
-        assert(!groupKeys(shape()).contains("code"))
-        Dictionary.ensure(spark, sf, "events", "event_type")
-        assert(groupKeys(shape()).contains("code"))
-        // a measure over the GROUPED column cannot move to code space
-        val overG = graft.Tables(spark, sf, "events")
-          .groupBy($"event_type")
-          .agg(countDistinct($"user_id").as("users"),
-            max($"event_type").as("mx"))
-        assert(!groupKeys(overG).contains("code"),
-          "an aggregate reading the grouped column must pass through")
-        // an all-rollup-servable shape is the rollup router's, not ours
-        val rollupShape = graft.Tables(spark, sf, "events")
-          .groupBy($"event_type").agg(count(lit(1)).as("n"))
-        assert(!groupKeys(rollupShape).contains("code"),
-          "count-only shapes must stay for the kilobyte rollup serve")
-        // artifact-side mutation breaks the watermark: untouched again
-        EnsureWatermark.invalidate(
-          Dictionary.dictPath(sf, "events", "event_type"))
-        assert(!groupKeys(shape()).contains("code"))
-      } finally DictionaryRouting.disableForTest(spark)
+      val f = routing
+      // no dictionary artifact: untouched
+      assert(!groupKeys(shape(f)).contains("code"))
+      Dictionary.ensure(spark, sf, "events", "event_type")
+      assert(groupKeys(shape(f)).contains("code"))
+      // a measure over the GROUPED column cannot move to code space
+      val overG = graft.Tables(f, sf, "events")
+        .groupBy($"event_type")
+        .agg(countDistinct($"user_id").as("users"),
+          max($"event_type").as("mx"))
+      assert(!groupKeys(overG).contains("code"),
+        "an aggregate reading the grouped column must pass through")
+      // an all-rollup-servable shape is the rollup router's, not ours
+      val rollupShape = graft.Tables(f, sf, "events")
+        .groupBy($"event_type").agg(count(lit(1)).as("n"))
+      assert(!groupKeys(rollupShape).contains("code"),
+        "count-only shapes must stay for the kilobyte rollup serve")
+      // artifact-side mutation breaks the watermark: untouched again
+      EnsureWatermark.invalidate(
+        Dictionary.dictPath(sf, "events", "event_type"))
+      assert(!groupKeys(shape(f)).contains("code"))
     }
   }
 
@@ -82,18 +81,16 @@ class DictionaryRoutingSpec extends SparkSpec {
       Seq(("a", 1L), ("a", 2L), (null, 3L), (null, 3L), ("b", 4L))
         .toDF("tag", "uid")
         .write.mode("overwrite").parquet(s"$dir/tags.parquet")
-      def q() = spark.read.parquet(s"$dir/tags.parquet")
+      def q(s: SparkSession) = s.read.parquet(s"$dir/tags.parquet")
         .groupBy($"tag")
         .agg(countDistinct($"uid").as("users"), count(lit(1)).as("n"))
         .orderBy($"tag")
-      try {
-        val truth = q().collect().map(_.toString).toSeq
-        Dictionary.ensure(spark, dir, "tags", "tag")
-        DictionaryRouting.enable(spark)
-        assert(groupKeys(q()).contains("code"))
-        assert(q().collect().map(_.toString).toSeq === truth,
-          "the NULL group must encode to the NULL code and decode back")
-      } finally DictionaryRouting.disableForTest(spark)
+      val truth = q(spark).collect().map(_.toString).toSeq
+      Dictionary.ensure(spark, dir, "tags", "tag")
+      val f = routing
+      assert(groupKeys(q(f)).contains("code"))
+      assert(q(f).collect().map(_.toString).toSeq === truth,
+        "the NULL group must encode to the NULL code and decode back")
     }
   }
 }

@@ -1,8 +1,8 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 import graft.operators.{EnsureWatermark, StatsCatalog}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 
@@ -25,6 +25,9 @@ class FdAggregationSpec extends SparkSpec {
     }.toDF("k", "name", "tag", "grp", "payload")
       .write.mode("overwrite").parquet(s"$dir/fd.parquet")
 
+  /** The shared session with the FD rule installed. */
+  private def reducing = Session.fork(spark, Seq(new FdAggregationRule(_)))
+
   private def groupSizes(df: DataFrame): Seq[Int] =
     df.queryExecution.optimizedPlan.collect {
       case a: Aggregate => a.groupingExpressions.size
@@ -36,19 +39,16 @@ class FdAggregationSpec extends SparkSpec {
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "fd")
       StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "name"))
-      val f = graft.Tables(spark, dir, "fd")
-      def shape = f.groupBy($"k", $"name")
+      def shape(s: SparkSession) = graft.Tables(s, dir, "fd")
+        .groupBy($"k", $"name")
         .agg(count(lit(1)).as("n"), sum($"payload").as("s"))
         .orderBy($"k")
-      val plain = shape.collect().map(_.toString).sorted
-      try {
-        FdAggregation.enable(spark)
-        assert(groupSizes(shape) === Seq(1),
-          s"proven k -> name must group by k alone:\n${shape.queryExecution.optimizedPlan}")
-        val reduced = shape.collect().map(_.toString).sorted
-        assert(reduced.sameElements(plain),
-          "the rewrite must be result-invisible, NULL name group included")
-      } finally FdAggregation.disableForTest(spark)
+      val plain = shape(spark).collect().map(_.toString).sorted
+      val reduced = shape(reducing)
+      assert(groupSizes(reduced) === Seq(1),
+        s"proven k -> name must group by k alone:\n${reduced.queryExecution.optimizedPlan}")
+      assert(reduced.collect().map(_.toString).sorted.sameElements(plain),
+        "the rewrite must be result-invisible, NULL name group included")
     }
   }
 
@@ -59,16 +59,14 @@ class FdAggregationSpec extends SparkSpec {
       StatsCatalog.ensure(spark, dir, "fd")
       StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "name"))
       StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "grp"))
-      val f = graft.Tables(spark, dir, "fd")
-      def shape = f.groupBy($"k", $"name", $"grp")
+      def shape(s: SparkSession) = graft.Tables(s, dir, "fd")
+        .groupBy($"k", $"name", $"grp")
         .agg(count(lit(1)).as("n"))
-      val plain = shape.collect().map(_.toString).sorted
-      try {
-        FdAggregation.enable(spark)
-        assert(groupSizes(shape) === Seq(1),
-          s"k -> name AND k -> grp must both drop:\n${shape.queryExecution.optimizedPlan}")
-        assert(shape.collect().map(_.toString).sorted.sameElements(plain))
-      } finally FdAggregation.disableForTest(spark)
+      val plain = shape(spark).collect().map(_.toString).sorted
+      val reduced = shape(reducing)
+      assert(groupSizes(reduced) === Seq(1),
+        s"k -> name AND k -> grp must both drop:\n${reduced.queryExecution.optimizedPlan}")
+      assert(reduced.collect().map(_.toString).sorted.sameElements(plain))
     }
   }
 
@@ -83,19 +81,16 @@ class FdAggregationSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$dir/fd2.parquet")
       StatsCatalog.ensure(spark, dir, "fd")
       StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "name"))
-      val f = graft.Tables(spark, dir, "fd")
-      val g = graft.Tables(spark, dir, "fd2")
-      // Union output reuses f's exprIds: a collect-based source match
-      // would find fd.parquet and "prove" the FD while g's rows break it
-      def shape = f.union(g).groupBy($"k", $"name")
+      // Union output reuses fd's exprIds: a collect-based source match
+      // would find fd.parquet and "prove" the FD while fd2's rows break it
+      def shape(s: SparkSession) = graft.Tables(s, dir, "fd")
+        .union(graft.Tables(s, dir, "fd2")).groupBy($"k", $"name")
         .agg(count(lit(1)).as("n"), sum($"payload").as("s"))
-      val plain = shape.collect().map(_.toString).sorted
-      try {
-        FdAggregation.enable(spark)
-        assert(groupSizes(shape) === Seq(2),
-          s"Union on the path must veto:\n${shape.queryExecution.optimizedPlan}")
-        assert(shape.collect().map(_.toString).sorted.sameElements(plain))
-      } finally FdAggregation.disableForTest(spark)
+      val plain = shape(spark).collect().map(_.toString).sorted
+      val reduced = shape(reducing)
+      assert(groupSizes(reduced) === Seq(2),
+        s"Union on the path must veto:\n${reduced.queryExecution.optimizedPlan}")
+      assert(reduced.collect().map(_.toString).sorted.sameElements(plain))
     }
   }
 
@@ -105,18 +100,16 @@ class FdAggregationSpec extends SparkSpec {
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "fd")
       StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "name"))
-      val f = graft.Tables(spark, dir, "fd")
       val dim = (0L to 5L).map(k => (k, s"bucket_${k % 2}")).toDF("k", "b")
-      def shape = f.where($"payload" > 10)
+      def shape(s: SparkSession) = graft.Tables(s, dir, "fd")
+        .where($"payload" > 10)
         .join(dim, Seq("k"))
         .groupBy($"k", $"name").agg(count(lit(1)).as("n"))
-      val plain = shape.collect().map(_.toString).sorted
-      try {
-        FdAggregation.enable(spark)
-        assert(groupSizes(shape) === Seq(1),
-          s"Filter/Join are row-preserving, the rewrite must still fire:\n${shape.queryExecution.optimizedPlan}")
-        assert(shape.collect().map(_.toString).sorted.sameElements(plain))
-      } finally FdAggregation.disableForTest(spark)
+      val plain = shape(spark).collect().map(_.toString).sorted
+      val reduced = shape(reducing)
+      assert(groupSizes(reduced) === Seq(1),
+        s"Filter/Join are row-preserving, the rewrite must still fire:\n${reduced.queryExecution.optimizedPlan}")
+      assert(reduced.collect().map(_.toString).sorted.sameElements(plain))
     }
   }
 
@@ -127,25 +120,22 @@ class FdAggregationSpec extends SparkSpec {
       StatsCatalog.ensure(spark, dir, "fd")
       StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "name"))
       graft.Tables(spark, dir, "fd").createOrReplaceTempView("fd_embed")
-      try {
-        FdAggregation.enable(spark)
-        // upper(name) is valid SQL while name is a grouping column —
-        // after a naive rewrite it would reference a dropped one
-        def embedded = spark.sql(
-          "SELECT k, upper(name) AS un, count(1) AS n FROM fd_embed GROUP BY k, name")
-        assert(groupSizes(embedded) === Seq(2),
-          s"embedded reference must bail:\n${embedded.queryExecution.optimizedPlan}")
-        embedded.collect() // and the plan must still execute
-        // references INSIDE aggregate functions stay safe to rewrite
-        def inAgg = spark.sql(
-          "SELECT k, name, count(name) AS n FROM fd_embed GROUP BY k, name")
-        assert(groupSizes(inAgg) === Seq(1),
-          s"agg-internal references are exact under the FD:\n${inAgg.queryExecution.optimizedPlan}")
-        val got = inAgg.collect().map(_.toString).sorted
-        FdAggregation.disableForTest(spark)
-        val plain = inAgg.collect().map(_.toString).sorted
-        assert(got.sameElements(plain))
-      } finally FdAggregation.disableForTest(spark)
+      val f = reducing
+      // upper(name) is valid SQL while name is a grouping column —
+      // after a naive rewrite it would reference a dropped one
+      val embedded = f.sql(
+        "SELECT k, upper(name) AS un, count(1) AS n FROM fd_embed GROUP BY k, name")
+      assert(groupSizes(embedded) === Seq(2),
+        s"embedded reference must bail:\n${embedded.queryExecution.optimizedPlan}")
+      embedded.collect() // and the plan must still execute
+      // references INSIDE aggregate functions stay safe to rewrite
+      def inAgg(s: SparkSession) = s.sql(
+        "SELECT k, name, count(name) AS n FROM fd_embed GROUP BY k, name")
+      assert(groupSizes(inAgg(f)) === Seq(1),
+        s"agg-internal references are exact under the FD:\n${inAgg(f).queryExecution.optimizedPlan}")
+      val got = inAgg(f).collect().map(_.toString).sorted
+      val plain = inAgg(spark).collect().map(_.toString).sorted
+      assert(got.sameElements(plain))
     }
   }
 
@@ -154,23 +144,20 @@ class FdAggregationSpec extends SparkSpec {
       val dir = tmpDir("graft-fd-none-data")
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "fd")
-      val f = graft.Tables(spark, dir, "fd")
-      try {
-        FdAggregation.enable(spark)
-        // no group artifact at all -> untouched
-        def nameShape = f.groupBy($"k", $"name").agg(count(lit(1)))
-        assert(groupSizes(nameShape) === Seq(2), "absent artifact -> no rewrite")
-        // ensured, but the pair is NOT an FD (tag alternates within k)
-        StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "tag"))
-        val tagShape = f.groupBy($"k", $"tag").agg(count(lit(1)))
-        assert(groupSizes(tagShape) === Seq(2), "disproven FD -> no rewrite")
-        // proven, then the artifact goes stale -> fail-closed again
-        StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "name"))
-        assert(groupSizes(nameShape) === Seq(1))
-        EnsureWatermark.invalidate(
-          StatsCatalog.groupStatsPath(dir, "fd", Seq("k", "name")))
-        assert(groupSizes(nameShape) === Seq(2), "stale artifact -> no rewrite")
-      } finally FdAggregation.disableForTest(spark)
+      val f = graft.Tables(reducing, dir, "fd")
+      // no group artifact at all -> untouched
+      def nameShape = f.groupBy($"k", $"name").agg(count(lit(1)))
+      assert(groupSizes(nameShape) === Seq(2), "absent artifact -> no rewrite")
+      // ensured, but the pair is NOT an FD (tag alternates within k)
+      StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "tag"))
+      val tagShape = f.groupBy($"k", $"tag").agg(count(lit(1)))
+      assert(groupSizes(tagShape) === Seq(2), "disproven FD -> no rewrite")
+      // proven, then the artifact goes stale -> fail-closed again
+      StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "name"))
+      assert(groupSizes(nameShape) === Seq(1))
+      EnsureWatermark.invalidate(
+        StatsCatalog.groupStatsPath(dir, "fd", Seq("k", "name")))
+      assert(groupSizes(nameShape) === Seq(2), "stale artifact -> no rewrite")
     }
   }
 }

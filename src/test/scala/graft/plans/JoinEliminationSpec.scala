@@ -1,8 +1,8 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 import graft.operators.{EnsureWatermark, StatsCatalog}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
@@ -31,9 +31,9 @@ class JoinEliminationSpec extends SparkSpec {
   private def joins(df: DataFrame): Seq[Join] =
     df.queryExecution.optimizedPlan.collect { case j: Join => j }
 
-  private def leftJoined(dir: String): DataFrame = {
-    val f = graft.Tables(spark, dir, "fact")
-    val d = graft.Tables(spark, dir, "dim")
+  private def leftJoined(s: SparkSession, dir: String): DataFrame = {
+    val f = graft.Tables(s, dir, "fact")
+    val d = graft.Tables(s, dir, "dim")
     f.join(d, f("fk") === d("dk"), "left")
   }
 
@@ -42,18 +42,18 @@ class JoinEliminationSpec extends SparkSpec {
       val dir = tmpDir("graft-jelim-data")
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "dim")
-      JoinElimination.enable(spark)
+      val elim = Session.fork(spark, Seq(new JoinEliminationRule(_)))
       // Project shape
-      val p = leftJoined(dir).select($"seg", $"v")
+      val p = leftJoined(elim, dir).select($"seg", $"v")
       assert(joins(p).isEmpty, s"join must be eliminated:\n${p.queryExecution.optimizedPlan}")
       // Aggregate shape
-      val a = leftJoined(dir).groupBy($"seg")
+      val a = leftJoined(elim, dir).groupBy($"seg")
         .agg(count(lit(1)).as("n"), round(sum($"v"), 2).as("sv"))
         .orderBy($"seg")
       assert(joins(a).isEmpty, s"join under aggregate must be eliminated:\n${a.queryExecution.optimizedPlan}")
       // semantics: identical to the physically-joined plan (left-outer
       // on a unique key preserves left cardinality even for danglers)
-      val f = graft.Tables(spark, dir, "fact")
+      val f = graft.Tables(elim, dir, "fact")
       val truth = f.groupBy($"seg")
         .agg(count(lit(1)).as("n"), round(sum($"v"), 2).as("sv"))
         .orderBy($"seg").collect()
@@ -69,26 +69,26 @@ class JoinEliminationSpec extends SparkSpec {
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "dim")
       StatsCatalog.ensure(spark, dir, "multi")
-      JoinElimination.enable(spark)
+      val elim = Session.fork(spark, Seq(new JoinEliminationRule(_)))
       // (a) right column referenced -> join stays
-      assert(joins(leftJoined(dir).select($"seg", $"dname")).nonEmpty)
+      assert(joins(leftJoined(elim, dir).select($"seg", $"dname")).nonEmpty)
       // (b) inner join -> stays (needs left-side referential integrity
       // no right-side statistic can prove; fk=6 would vanish)
-      val f = graft.Tables(spark, dir, "fact")
-      val d = graft.Tables(spark, dir, "dim")
+      val f = graft.Tables(elim, dir, "fact")
+      val d = graft.Tables(elim, dir, "dim")
       val inner = f.join(d, f("fk") === d("dk"), "inner").select($"seg", $"v")
       assert(joins(inner).nonEmpty)
       assert(inner.count() === 5L, "inner join genuinely drops the dangler")
       // (c) non-unique right key -> stays (fan-out is real)
-      val m = graft.Tables(spark, dir, "multi")
+      val m = graft.Tables(elim, dir, "multi")
       val fanout = f.join(m, f("fk") === m("mk"), "left").select($"seg", $"v")
       assert(joins(fanout).nonEmpty)
       assert(fanout.count() === 7L, "duplicate mk=1 genuinely fans out")
       // (d) stale stats watermark -> stays, fail-closed
       EnsureWatermark.invalidate(StatsCatalog.statsPath(dir, "dim"))
-      assert(joins(leftJoined(dir).select($"seg", $"v")).nonEmpty)
+      assert(joins(leftJoined(elim, dir).select($"seg", $"v")).nonEmpty)
       StatsCatalog.reEnsure(spark, dir, "dim")
-      assert(joins(leftJoined(dir).select($"seg", $"v")).isEmpty)
+      assert(joins(leftJoined(elim, dir).select($"seg", $"v")).isEmpty)
     }
   }
 
@@ -97,16 +97,16 @@ class JoinEliminationSpec extends SparkSpec {
       val dir = tmpDir("graft-jelim-alias-data")
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "dim")
-      JoinElimination.enable(spark)
+      val elim = Session.fork(spark, Seq(new JoinEliminationRule(_)))
       // a catalog-managed copy of dim at a path the convention cannot
       // name — registration asserts identity, stats stay the original's
-      graft.Tables(spark, dir, "dim")
+      graft.Tables(elim, dir, "dim")
         .write.mode("overwrite").parquet(s"$dir/warehouse_dim")
       // NOTE: a DataFrame memoizes its QueryExecution, so the plan is
       // rebuilt from scratch around the registration
       def joined() = {
-        val f = graft.Tables(spark, dir, "fact")
-        val alias = spark.read.parquet(s"$dir/warehouse_dim")
+        val f = graft.Tables(elim, dir, "fact")
+        val alias = elim.read.parquet(s"$dir/warehouse_dim")
         f.join(alias, f("fk") === alias("dk"), "left").select($"seg", $"v")
       }
       assert(joins(joined()).nonEmpty,
@@ -122,9 +122,9 @@ class JoinEliminationSpec extends SparkSpec {
       val dir = tmpDir("graft-jelim-conj-data")
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "dim")
-      JoinElimination.enable(spark)
-      val f = graft.Tables(spark, dir, "fact")
-      val d = graft.Tables(spark, dir, "dim")
+      val elim = Session.fork(spark, Seq(new JoinEliminationRule(_)))
+      val f = graft.Tables(elim, dir, "fact")
+      val d = graft.Tables(elim, dir, "dim")
       val extra = f.join(d, f("fk") === d("dk") && f("v") > 25.0, "left")
         .select($"seg", $"v")
       assert(joins(extra).isEmpty,

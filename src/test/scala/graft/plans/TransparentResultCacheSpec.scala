@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 import graft.operators.ResultCache
 import org.apache.spark.sql.functions._
 
@@ -13,6 +13,9 @@ import org.apache.spark.sql.functions._
 class TransparentResultCacheSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The shared session with the transparent cache installed. */
+  private def caching = Session.fork(spark, Seq(new TransparentResultCacheRule(_)))
+
   private def writeTable(dir: String): Unit =
     (1L to 800L).map(i => (i % 9, i)).toDF("k", "v")
       .write.mode("overwrite").parquet(s"$dir/t.parquet")
@@ -21,26 +24,24 @@ class TransparentResultCacheSpec extends SparkSpec {
     withIndexRoot("graft-trc") {
       val dir = tmpDir("graft-trc-data")
       writeTable(dir)
-      def shape = graft.Tables(spark, dir, "t")
+      val c = caching
+      def shape = graft.Tables(c, dir, "t")
         .groupBy($"k").agg(count(lit(1)).as("n"), sum($"v").as("s"))
         .orderBy($"k")
-      try {
-        TransparentResultCache.enable(spark)
-        val computed = shape.collect().map(_.toString).toSeq
-        assert(ResultCache.publish(spark, shape), "first publish writes")
-        assert(!ResultCache.publish(spark, shape),
-          "re-publish of a served plan is a no-op (the plan now reads the cache)")
-        val served = shape
-        assert(served.inputFiles.forall(_.contains("result_cache")),
-          s"the identical query must plan as a cache read:\n${served.queryExecution.optimizedPlan}")
-        assert(served.collect().map(_.toString).toSeq === computed,
-          "the substitution is result-invisible")
-        // a semantically different query computes from the source
-        val other = graft.Tables(spark, dir, "t")
-          .where($"v" > 100L).groupBy($"k").agg(count(lit(1)).as("n"))
-        assert(other.inputFiles.exists(_.contains("t.parquet")),
-          "a different plan never serves another plan's entry")
-      } finally TransparentResultCache.disableForTest(spark)
+      val computed = shape.collect().map(_.toString).toSeq
+      assert(ResultCache.publish(c, shape), "first publish writes")
+      assert(!ResultCache.publish(c, shape),
+        "re-publish of a served plan is a no-op (the plan now reads the cache)")
+      val served = shape
+      assert(served.inputFiles.forall(_.contains("result_cache")),
+        s"the identical query must plan as a cache read:\n${served.queryExecution.optimizedPlan}")
+      assert(served.collect().map(_.toString).toSeq === computed,
+        "the substitution is result-invisible")
+      // a semantically different query computes from the source
+      val other = graft.Tables(c, dir, "t")
+        .where($"v" > 100L).groupBy($"k").agg(count(lit(1)).as("n"))
+      assert(other.inputFiles.exists(_.contains("t.parquet")),
+        "a different plan never serves another plan's entry")
     }
   }
 
@@ -48,19 +49,17 @@ class TransparentResultCacheSpec extends SparkSpec {
     withIndexRoot("graft-trc-mut") {
       val dir = tmpDir("graft-trc-mut-data")
       writeTable(dir)
-      def shape = graft.Tables(spark, dir, "t")
+      val c = caching
+      def shape = graft.Tables(c, dir, "t")
         .groupBy($"k").agg(sum($"v").as("s")).orderBy($"k")
-      try {
-        TransparentResultCache.enable(spark)
-        assert(ResultCache.publish(spark, shape))
-        assert(shape.inputFiles.forall(_.contains("result_cache")))
-        (1L to 900L).map(i => (i % 9, i)).toDF("k", "v")
-          .write.mode("overwrite").parquet(s"$dir/t.parquet")
-        assert(shape.inputFiles.exists(_.contains("t.parquet")),
-          "mutated source -> different stamp -> compute from source")
-        assert(shape.agg(sum($"s")).head().getLong(0) ===
-          (1L to 900L).sum)
-      } finally TransparentResultCache.disableForTest(spark)
+      assert(ResultCache.publish(c, shape))
+      assert(shape.inputFiles.forall(_.contains("result_cache")))
+      (1L to 900L).map(i => (i % 9, i)).toDF("k", "v")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      assert(shape.inputFiles.exists(_.contains("t.parquet")),
+        "mutated source -> different stamp -> compute from source")
+      assert(shape.agg(sum($"s")).head().getLong(0) ===
+        (1L to 900L).sum)
     }
   }
 
@@ -68,22 +67,20 @@ class TransparentResultCacheSpec extends SparkSpec {
     withIndexRoot("graft-trc-unc") {
       val dir = tmpDir("graft-trc-unc-data")
       writeTable(dir)
-      try {
-        TransparentResultCache.enable(spark)
-        // PROJECTED rand survives optimization (a rand FILTER like
-        // `rand() >= 0.0` is simplified away entirely — the optimized
-        // plan is then genuinely deterministic and publishing it is
-        // sound; the keyspace describes what EXECUTES)
-        def randShape = graft.Tables(spark, dir, "t")
-          .select($"k", rand().as("r"))
-        assert(!ResultCache.publish(spark, randShape),
-          "non-deterministic plans are uncacheable")
-        assert(randShape.inputFiles.exists(_.contains("t.parquet")))
-        val local = Seq((1L, 2L)).toDF("a", "b").groupBy($"a")
-          .agg(sum($"b").as("s"))
-        assert(!ResultCache.publish(spark, local),
-          "non-file leaves are uncacheable")
-      } finally TransparentResultCache.disableForTest(spark)
+      val c = caching
+      // PROJECTED rand survives optimization (a rand FILTER like
+      // `rand() >= 0.0` is simplified away entirely — the optimized
+      // plan is then genuinely deterministic and publishing it is
+      // sound; the keyspace describes what EXECUTES)
+      def randShape = graft.Tables(c, dir, "t")
+        .select($"k", rand().as("r"))
+      assert(!ResultCache.publish(c, randShape),
+        "non-deterministic plans are uncacheable")
+      assert(randShape.inputFiles.exists(_.contains("t.parquet")))
+      val local = Seq((1L, 2L)).toDF("a", "b").groupBy($"a")
+        .agg(sum($"b").as("s"))
+      assert(!ResultCache.publish(c, local),
+        "non-file leaves are uncacheable")
     }
   }
 
@@ -91,27 +88,25 @@ class TransparentResultCacheSpec extends SparkSpec {
     withIndexRoot("graft-trc-time") {
       val dir = tmpDir("graft-trc-time-data")
       writeTable(dir)
-      try {
-        TransparentResultCache.enable(spark)
-        // the optimizer's ComputeCurrentTime replaces the time family
-        // with LITERALS of the query's moment BEFORE this keyspace —
-        // so the evaluated instant is part of the key: same-moment
-        // reuse is exact, a new moment re-keys. Pin the mechanism:
-        // no time-family expression survives into the optimized plan
-        def timeShape = graft.Tables(spark, dir, "t")
-          .select($"k", current_timestamp().as("now"))
-        import org.apache.spark.sql.catalyst.expressions.CurrentTimestampLike
-        val survived = timeShape.queryExecution.optimizedPlan
-          .expressions.exists(_.exists(_.isInstanceOf[CurrentTimestampLike]))
-        assert(!survived,
-          "the optimizer must freeze current_timestamp to a literal before keying")
-        assert(ResultCache.publish(spark, timeShape))
-        // a NEW query freezes a NEW moment -> new literal -> new key:
-        // it computes from the source; the stale-hit the analyzed-plan
-        // tier screens against cannot occur in this keyspace
-        assert(timeShape.inputFiles.exists(_.contains("t.parquet")),
-          "a later moment must miss the earlier moment's entry")
-      } finally TransparentResultCache.disableForTest(spark)
+      val c = caching
+      // the optimizer's ComputeCurrentTime replaces the time family
+      // with LITERALS of the query's moment BEFORE this keyspace —
+      // so the evaluated instant is part of the key: same-moment
+      // reuse is exact, a new moment re-keys. Pin the mechanism:
+      // no time-family expression survives into the optimized plan
+      def timeShape = graft.Tables(c, dir, "t")
+        .select($"k", current_timestamp().as("now"))
+      import org.apache.spark.sql.catalyst.expressions.CurrentTimestampLike
+      val survived = timeShape.queryExecution.optimizedPlan
+        .expressions.exists(_.exists(_.isInstanceOf[CurrentTimestampLike]))
+      assert(!survived,
+        "the optimizer must freeze current_timestamp to a literal before keying")
+      assert(ResultCache.publish(c, timeShape))
+      // a NEW query freezes a NEW moment -> new literal -> new key:
+      // it computes from the source; the stale-hit the analyzed-plan
+      // tier screens against cannot occur in this keyspace
+      assert(timeShape.inputFiles.exists(_.contains("t.parquet")),
+        "a later moment must miss the earlier moment's entry")
     }
   }
 }
